@@ -548,6 +548,52 @@ def ivf_assign(
     return src.mapInPandas(assign, schema=f"{out_id} long, cell int, v array<double>")
 
 
+def _rank_topk(
+    scored: DataFrame, score: str, k: int, by: str = "query_id"
+) -> DataFrame:
+    """Per-``by`` top-k of a scored candidate frame: ``score`` desc,
+    ``neighbor_id`` asc, keep ``rnk`` ≤ ``k``; the columns are
+    ``scored``'s plus ``rnk``. The one ranking tail of every top-k
+    operator in this module (exact, LSH, IVF, PQ, IVF-PQ, the
+    re-rankers, hard negatives), so each oracle-bearing twin's hash
+    gate covers the ranker its production key runs. Scores are
+    rounded BEFORE they reach here (round-before-compare), and the id
+    tie-break makes the order engine-stable."""
+    w = Window.partitionBy(by).orderBy(
+        F.col(score).desc(), F.col("neighbor_id").asc()
+    )
+    return scored.withColumn("rnk", F.row_number().over(w)).filter(
+        F.col("rnk") <= k
+    )
+
+
+def _ivf_search(corpus: DataFrame, probes: DataFrame, k: int) -> DataFrame:
+    """The IVF search tail: ``corpus`` (neighbor_id, cell, cv, cn) —
+    one row per corpus vector — equi-joins on the cell id against the
+    broadcast ``probes`` (query_id, cell, qv, qn) — ``n_probe`` rows
+    per query — self-pairs drop, candidates score by 4dp
+    :func:`cosine_pair` on the hoisted norms, and :func:`_rank_topk`
+    ranks them. Shared by :func:`ann_ivf_topk` (trained cells) and
+    :func:`ann_ivf_lloyd_seeded_topk` / :func:`ann_ivf_seeded_topk`
+    (seeded cells): only the ``cell`` column's source differs.
+
+    Candidate generation is an equi-join on the cell id — shuffle ∝
+    corpus × 1 (each corpus vector sits in exactly one cell)."""
+    scored = (
+        corpus.join(F.broadcast(probes), "cell")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            round_half_up(
+                cosine_pair(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")),
+                4,
+            ).alias("cos_sim"),
+        )
+    )
+    return _rank_topk(scored, "cos_sim", k)
+
+
 def ann_ivf_topk(
     emb: DataFrame,
     queries: DataFrame,
@@ -563,38 +609,27 @@ def ann_ivf_topk(
     among the query's ``n_probe`` nearest cells.
 
     Same output contract as :func:`brute_force_topk` (approximate
-    recall). Candidate generation is an equi-join on the cell id —
-    shuffle ∝ corpus × 1 (each corpus vector sits in exactly one cell);
-    recall/cost is tuned by ``n_probe``/``n_cells``. The third member
-    of the ANN family: brute force (exact), hyperplane LSH (stateless
-    buckets), IVF (data-adaptive buckets — fewest candidates per unit
-    of recall when the corpus clusters).
+    recall); recall/cost is tuned by ``n_probe``/``n_cells``. The
+    third member of the ANN family: brute force (exact), hyperplane
+    LSH (stateless buckets), IVF (data-adaptive buckets — fewest
+    candidates per unit of recall when the corpus clusters). Cells
+    come from trained :func:`kmeans_centroids` via :func:`ivf_assign`;
+    the search is :func:`_ivf_search`, the same code the seeded twins'
+    DuckDB gates check.
     """
     cents = kmeans_centroids(emb, dim, n_cells=n_cells, vec_col=vec_col, seed=seed)
-    # per-vector norms hoisted out of the per-pair cosine (r16,
-    # bit-identical — see cosine_pair)
-    corpus = ivf_assign(
-        emb, cents, vec_col, id_col, n_probe=1, out_id="neighbor_id"
-    ).withColumn("cn", norm(F.col("v")))
-    probes = ivf_assign(queries, cents, vec_col, id_col, n_probe=n_probe, out_id="query_id")
-    probes = probes.withColumnRenamed("v", "qv").withColumn("qn", norm(F.col("qv")))
-    scored = (
-        corpus.join(F.broadcast(probes), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            round_half_up(
-                cosine_pair(F.col("qv"), F.col("v"), F.col("qn"), F.col("cn")),
-                4,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
+
+    def side(frame: DataFrame, out_id: str, n: int, vec: str, nrm: str) -> DataFrame:
+        # per-vector norm hoisted out of the per-pair cosine
+        # (bit-identical — see cosine_pair)
+        return ivf_assign(
+            frame, cents, vec_col, id_col, n_probe=n, out_id=out_id
+        ).select(out_id, "cell", F.col("v").alias(vec), norm(F.col("v")).alias(nrm))
+
+    return _ivf_search(
+        side(emb, "neighbor_id", 1, "cv", "cn"),
+        side(queries, "query_id", n_probe, "qv", "qn"),
+        k,
     )
 
 
@@ -609,6 +644,65 @@ def _lowest_ids(df: DataFrame, id_col: str, n: int) -> DataFrame:
     return df.select(id_col).orderBy(F.col(id_col).asc()).limit(n)
 
 
+def _vectors(emb: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+    """(__vid long, __e, __n) — the seeded twins' vector frame: the id
+    cast to long (the type :func:`ivf_assign` emits, so trained and
+    seeded assignments join back alike), the vector as array<double>,
+    and its norm hoisted next to it (every (vector, seed) pair then
+    pays one dot fold instead of three — bit-identical, see
+    :func:`cosine_pair`)."""
+    ea = as_double_array(F.col(vec_col))
+    return emb.select(
+        F.col(id_col).cast("long").alias("__vid"),
+        ea.alias("__e"),
+        norm(ea).alias("__n"),
+    )
+
+
+def _lowest_seeds(v: DataFrame, n_seeds: int) -> DataFrame:
+    """(__cid, __ce, __cn): the ``n_seeds`` lowest-id vectors of a
+    :func:`_vectors` frame, as seed centroids for
+    :func:`_nearest_seeds`."""
+    return v.join(F.broadcast(_lowest_ids(v, "__vid", n_seeds)), "__vid").select(
+        F.col("__vid").alias("__cid"),
+        F.col("__e").alias("__ce"),
+        F.col("__n").alias("__cn"),
+    )
+
+
+def _nearest_seeds(
+    side: DataFrame, seeds: DataFrame, n: int = 1, sim: "Column | None" = None
+) -> DataFrame:
+    """(__aid, cell): each ``side`` vector's ``n`` nearest seeds — the
+    SQL-expressible counterpart of :func:`ivf_assign` that every
+    oracle-bearing twin assigns with. ``side`` is (__vid, __e, __n),
+    ``seeds`` (__cid, __ce, __cn) — the lowest-id vectors
+    (:func:`_lowest_seeds`) or Lloyd-updated centroid literals. The
+    similarity is :func:`cosine_pair` (``sim`` overrides it with any
+    expression over the two frames' columns), rounded to 6dp BEFORE
+    ranking with the seed id as tie-break, so the cell choice is
+    engine-stable.
+
+    Scale shape: seeds broadcast (n_seeds × dim floats), a map-side
+    crossJoin, and a row_number window partitioned by the
+    high-cardinality vector id (no global window)."""
+    if sim is None:
+        sim = cosine_pair(F.col("__e"), F.col("__ce"), F.col("__n"), F.col("__cn"))
+    sims = side.crossJoin(F.broadcast(seeds)).select(
+        F.col("__vid").alias("__aid"),
+        F.col("__cid"),
+        round_half_up(sim, 6).alias("__sim"),
+    )
+    w = Window.partitionBy("__aid").orderBy(
+        F.col("__sim").desc(), F.col("__cid").asc()
+    )
+    return (
+        sims.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= n)
+        .select("__aid", F.col("__cid").alias("cell"))
+    )
+
+
 def ann_ivf_seeded_topk(
     emb: DataFrame,
     queries: DataFrame,
@@ -620,207 +714,41 @@ def ann_ivf_seeded_topk(
 ) -> DataFrame:
     """IVF routing with DETERMINISTIC seed centroids (the ``n_seeds``
     lowest-id vectors, no Lloyd iterations) — the oracle-bearing twin
-    of :func:`ann_ivf_topk`: assignment, probing, candidate join and
-    re-ranking are the IDENTICAL routing pipeline, but the "codebook"
-    is SQL-expressible, so a DuckDB oracle can replay every step and
+    of :func:`ann_ivf_topk`: :func:`ann_ivf_lloyd_seeded_topk` with
+    ``n_iters=0``. Assignment (:func:`_nearest_seeds`), probing,
+    candidate join and re-ranking (:func:`_ivf_search`) are the
+    production key's routing pipeline, but the "codebook" is
+    SQL-expressible, so a DuckDB oracle can replay every step and
     hash-check cell membership AND final scores. The production key
     keeps trained k-means centroids (better recall per candidate);
     this twin value-gates the routing math those centroids feed.
-
-    Pure Catalyst: seeds broadcast, per-vector cell rank is a window
-    partitioned by the vector id (high-cardinality key — no global
-    window), candidates equi-join on the cell id. Assignment
-    similarity rounds to 6dp BEFORE ranking (round-before-compare, cid
-    tie-break) so the cell choice is engine-stable.
     """
-    # per-vector norm hoisted next to the vector (r16): every
-    # assignment/score pair below pays one dot fold instead of three —
-    # bit-identical (see cosine_pair)
-    ea = as_double_array(F.col(vec_col))
-    v = emb.select(
-        F.col(id_col).alias("__vid"), ea.alias("__e"), norm(ea).alias("__n")
-    )
-    seeds = (
-        v.join(F.broadcast(_lowest_ids(v, "__vid", n_seeds)), "__vid")
-        .select(
-            F.col("__vid").alias("__cid"),
-            F.col("__e").alias("__se"),
-            F.col("__n").alias("__sn"),
-        )
-    )
-
-    def cells(side: DataFrame, out_id: str, n: int) -> DataFrame:
-        sims = side.crossJoin(F.broadcast(seeds)).select(
-            F.col("__vid").alias(out_id),
-            F.col("__cid"),
-            round_half_up(
-                cosine_pair(
-                    F.col("__e"), F.col("__se"), F.col("__n"), F.col("__sn")
-                ),
-                6,
-            ).alias("__sim"),
-        )
-        w = Window.partitionBy(out_id).orderBy(
-            F.col("__sim").desc(), F.col("__cid").asc()
-        )
-        return (
-            sims.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= n)
-            .select(out_id, F.col("__cid").alias("cell"))
-        )
-
-    corpus = cells(v, "neighbor_id", 1).join(
-        v.select(
-            F.col("__vid").alias("neighbor_id"),
-            F.col("__e").alias("cv"),
-            F.col("__n").alias("cn"),
-        ),
-        "neighbor_id",
-    )
-    probes = (
-        cells(v.join(queries.select(F.col(id_col).alias("__vid")), "__vid"),
-              "query_id", n_probe)
-        .join(
-            v.select(
-                F.col("__vid").alias("query_id"),
-                F.col("__e").alias("qv"),
-                F.col("__n").alias("qn"),
-            ),
-            "query_id",
-        )
-    )
-    scored = (
-        corpus.join(F.broadcast(probes), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            round_half_up(
-                cosine_pair(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")),
-                4,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
+    return ann_ivf_lloyd_seeded_topk(
+        emb, queries, n_seeds=n_seeds, n_iters=0, n_probe=n_probe, k=k,
+        vec_col=vec_col, id_col=id_col,
     )
 
 
-def ann_ivf_lloyd_seeded_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    n_seeds: int = 16,
-    n_iters: int = 2,
-    n_probe: int = 4,
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """IVF routing with ``n_iters`` UNROLLED spherical-Lloyd updates
-    from the deterministic 16-lowest-id seed — the oracle-bearing twin
-    that value-gates the TRAINED k-means path (:func:`ann_ivf_topk` /
-    :func:`kmeans_centroids`) which :func:`ann_ivf_seeded_topk`'s
-    training-free twin could not reach (VERDICT r14 #3a).
-
-    Every Lloyd step is engine-portable by the exact-integer
-    discipline: (1) assignment ranks 6dp-ROUNDED cosines (cid
-    tie-break) against the current centroid literals; (2) the centroid
-    update averages UNIT vectors whose coordinates are quantized to
-    BIGINT first (``floor(u·1e6 + 0.5)``), so the per-(cell, dim) sums
-    are exact in any addition order; (3) the new centroid component is
-    ONE float composition of those exact integers —
-    ``round6(S_j / sqrt(Σ_j S_j²))`` (the Σ S_j² runs in arbitrary-
-    precision ints on the driver / HUGEINT in the oracle) — so both
-    engines materialize bit-identical centroid lists for the next
-    step. A cell that captures no members simply drops (with real
-    embeddings every seed captures at least itself; the drop rule is
-    stated so both engines agree even in the degenerate case); an
-    all-zero cell sum yields a zero centroid.
-
-    Scale shape: the quantized unit projection is computed once and
-    persisted; each iteration is one broadcast-literal assignment pass
-    (corpus × n_seeds 6dp cosines, window partitioned by the
-    high-cardinality vector id) plus a (cell, dim)-grain BIGINT
-    aggregate of which only n_seeds × dim rows reach the driver
-    (metadata scale — the kmeans partial-sum pattern). Routing tail
-    (probe → candidate equi-join → 4dp re-rank) is identical to
-    :func:`ann_ivf_seeded_topk`.
-    """
+def _spherical_lloyd(
+    v: DataFrame, seeds: DataFrame, n_iters: int
+) -> "DataFrame | None":
+    """``n_iters`` engine-portable spherical-Lloyd updates of
+    ``seeds`` over a :func:`_vectors` frame, returned as a
+    (__cid, __ce, __cn) centroid-literal frame (None on an empty
+    corpus). See :func:`ann_ivf_lloyd_seeded_topk` for the
+    exact-integer discipline."""
     import math
 
-    spark = emb.sparkSession
-    # per-vector norm hoisted next to the vector (r16): each of the 4
-    # assignment/score passes pays one dot fold per pair instead of
-    # three — bit-identical (see cosine_pair)
-    ea = as_double_array(F.col(vec_col))
-    v = emb.select(
-        # id cast to long (ADVICE r16): the empty-corpus guard below
-        # declares `query_id long, neighbor_id long`; casting here makes
-        # the non-empty path's schema match it for any integral id type
-        # (same discipline as kcenter_coreset / semdedup_seeded).
-        F.col(id_col).cast("long").alias("__vid"),
-        ea.alias("__e"),
-        norm(ea).alias("__n"),
-    )
-    first_row = v.select("__e").first()
-    if first_row is None:
-        # empty corpus → empty result frame, same schema (ADVICE r15 —
-        # mirrors kcenter_coreset's guard instead of a TypeError)
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cos_sim double, rnk int"
-        )
-    dim = len(first_row["__e"])
-    seed_rows = (
-        v.join(F.broadcast(_lowest_ids(v, "__vid", n_seeds)), "__vid")
-        .orderBy("__vid")
-        .collect()
-    )
+    spark = v.sparkSession
+    seed_rows = seeds.orderBy("__cid").collect()
+    if not seed_rows:
+        return None
+    dim = len(seed_rows[0]["__ce"])
     # iteration-0 "centroids" are the raw seed vectors (cosine is
     # normalization-invariant, so assignment 1 matches the seeded twin)
     cents: "list[tuple[int, list[float]]]" = [
-        (int(r["__vid"]), [float(x) for x in r["__e"]]) for r in seed_rows
+        (int(r["__cid"]), [float(x) for x in r["__ce"]]) for r in seed_rows
     ]
-
-    uq = (
-        _unit_projection(v, "__e", "__vid", "__uid")
-        .select(
-            "__uid",
-            F.posexplode(F.col("__unit")).alias("__j", "__u"),
-        )
-        .select(
-            "__uid",
-            "__j",
-            F.floor(F.col("__u") * F.lit(1.0e6) + F.lit(0.5))
-            .cast("long")
-            .alias("__q"),
-        )
-        .persist()
-    )
-
-    def assign(side: DataFrame, cent_df: DataFrame, out_id: str, n: int) -> DataFrame:
-        sims = side.crossJoin(F.broadcast(cent_df)).select(
-            F.col("__vid").alias(out_id),
-            F.col("__cid"),
-            round_half_up(
-                cosine_pair(
-                    F.col("__e"), F.col("__ce"), F.col("__n"), F.col("__cn")
-                ),
-                6,
-            ).alias("__sim"),
-        )
-        w = Window.partitionBy(out_id).orderBy(
-            F.col("__sim").desc(), F.col("__cid").asc()
-        )
-        return (
-            sims.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= n)
-            .select(out_id, F.col("__cid").alias("cell"))
-        )
 
     def cent_frame() -> DataFrame:
         return spark.createDataFrame(
@@ -828,11 +756,25 @@ def ann_ivf_lloyd_seeded_topk(
             "__cid long, __ce array<double>, __cn double",
         )
 
+    uq = (
+        _unit_projection(v, "__e", "__vid", "__aid")
+        .select(
+            "__aid",
+            F.posexplode(F.col("__unit")).alias("__j", "__u"),
+        )
+        .select(
+            "__aid",
+            "__j",
+            F.floor(F.col("__u") * F.lit(1.0e6) + F.lit(0.5))
+            .cast("long")
+            .alias("__q"),
+        )
+        .persist()
+    )
     try:
         for _ in range(n_iters):
-            cells = assign(v, cent_frame(), "__uid", 1)
             sums = (
-                uq.join(cells, "__uid")
+                uq.join(_nearest_seeds(v, cent_frame()), "__aid")
                 .groupBy("cell", "__j")
                 .agg(F.sum("__q").alias("__s"))
                 .collect()
@@ -856,51 +798,82 @@ def ann_ivf_lloyd_seeded_topk(
             cents = new_cents
     finally:
         uq.unpersist()
+    return cent_frame()
 
-    trained = cent_frame()
-    corpus = assign(v, trained, "neighbor_id", 1).join(
-        v.select(
-            F.col("__vid").alias("neighbor_id"),
-            F.col("__e").alias("cv"),
-            F.col("__n").alias("cn"),
-        ),
-        "neighbor_id",
-    )
-    probes = (
-        assign(
-            v.join(queries.select(F.col(id_col).alias("__vid")), "__vid"),
-            trained,
-            "query_id",
-            n_probe,
+
+def ann_ivf_lloyd_seeded_topk(
+    emb: DataFrame,
+    queries: DataFrame,
+    n_seeds: int = 16,
+    n_iters: int = 2,
+    n_probe: int = 4,
+    k: int = 10,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """IVF routing with ``n_iters`` UNROLLED spherical-Lloyd updates
+    from the deterministic 16-lowest-id seed — the oracle-bearing twin
+    that value-gates the TRAINED k-means path (:func:`ann_ivf_topk` /
+    :func:`kmeans_centroids`) which :func:`ann_ivf_seeded_topk`'s
+    training-free twin (``n_iters=0``) could not reach.
+
+    Every Lloyd step is engine-portable by the exact-integer
+    discipline: (1) assignment ranks 6dp-ROUNDED cosines (cid
+    tie-break) against the current centroid literals; (2) the centroid
+    update averages UNIT vectors whose coordinates are quantized to
+    BIGINT first (``floor(u·1e6 + 0.5)``), so the per-(cell, dim) sums
+    are exact in any addition order; (3) the new centroid component is
+    ONE float composition of those exact integers —
+    ``round6(S_j / sqrt(Σ_j S_j²))`` (the Σ S_j² runs in arbitrary-
+    precision ints on the driver / HUGEINT in the oracle) — so both
+    engines materialize bit-identical centroid lists for the next
+    step. A cell that captures no members simply drops (with real
+    embeddings every seed captures at least itself; the drop rule is
+    stated so both engines agree even in the degenerate case); an
+    all-zero cell sum yields a zero centroid.
+
+    Scale shape: the quantized unit projection is computed once and
+    persisted; each iteration is one broadcast-literal assignment pass
+    (:func:`_nearest_seeds`: corpus × n_seeds 6dp cosines, window
+    partitioned by the high-cardinality vector id) plus a
+    (cell, dim)-grain BIGINT aggregate of which only n_seeds × dim
+    rows reach the driver (metadata scale — the kmeans partial-sum
+    pattern). The routing tail is :func:`_ivf_search`, the production
+    key's own.
+    """
+    # id cast to long inside _vectors: the empty-corpus guard below
+    # declares `query_id long, neighbor_id long`, and the
+    # non-empty path's schema matches it for any integral id type
+    v = _vectors(emb, vec_col, id_col)
+    cents = _lowest_seeds(v, n_seeds)
+    if n_iters:
+        cents = _spherical_lloyd(v, cents, n_iters)
+        if cents is None:
+            # empty corpus → empty result frame, same schema (mirrors
+            # kcenter_coreset's guard instead of a TypeError)
+            return emb.sparkSession.createDataFrame(
+                [], "query_id long, neighbor_id long, cos_sim double, rnk int"
+            )
+
+    def side(frame: DataFrame, out_id: str, n: int, vec: str, nrm: str) -> DataFrame:
+        return (
+            _nearest_seeds(frame, cents, n)
+            .select(F.col("__aid").alias(out_id), "cell")
+            .join(
+                v.select(
+                    F.col("__vid").alias(out_id),
+                    F.col("__e").alias(vec),
+                    F.col("__n").alias(nrm),
+                ),
+                out_id,
+            )
         )
-        .join(
-            v.select(
-                F.col("__vid").alias("query_id"),
-                F.col("__e").alias("qv"),
-                F.col("__n").alias("qn"),
-            ),
-            "query_id",
-        )
-    )
-    scored = (
-        corpus.join(F.broadcast(probes), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            round_half_up(
-                cosine_pair(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")),
-                4,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
+
+    probe_side = v.join(queries.select(F.col(id_col).alias("__vid")), "__vid")
+    return _ivf_search(
+        side(v, "neighbor_id", 1, "cv", "cn"),
+        side(probe_side, "query_id", n_probe, "qv", "qn"),
+        k,
     )
 
 
@@ -1026,12 +999,7 @@ def brute_force_topk(
             round_half_up(dot(F.col("query_id_v"), F.col("neighbor_id_v")), 4).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
-    )
+    return _rank_topk(scored, "cos_sim", k)
 
 
 def mmr_rerank(
@@ -1436,12 +1404,7 @@ def ann_lsh_topk(
             round_half_up(cosine(F.col("qv"), F.col("cv")), 4).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
-    )
+    return _rank_topk(scored, "cos_sim", k)
 
 
 def dim_bounds(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -1834,14 +1797,7 @@ def ann_topk_pq(
             round_half_up(score, 4).alias("pq_score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("pq_score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "pq_score", "rnk")
-    )
+    return _rank_topk(scored, "pq_score", k)
 
 
 def ann_pq_seeded_topk(
@@ -1945,14 +1901,7 @@ def ann_pq_seeded_topk(
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("pq_score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "pq_score", "rnk")
-    )
+    return _rank_topk(scored, "pq_score", k)
 
 
 def embedding_cov_quantized(
@@ -2134,14 +2083,7 @@ def ann_topk_ivfpq(
             round_half_up(score, 4).alias("ivfpq_score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("ivfpq_score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "ivfpq_score", "rnk")
-    )
+    return _rank_topk(scored, "ivfpq_score", k)
 
 
 def ann_ivfpq_seeded_topk(
@@ -2181,36 +2123,26 @@ def ann_ivfpq_seeded_topk(
     # whole assignment window chain). Two tracked persists collapse
     # that to one scan + one window pass; released per key via
     # caching.release_cached().
-    u = caching.persist_tracked(_unit_projection(emb, vec_col, id_col, "vid"))
-    seed_ids = _lowest_ids(u, "vid", n_seeds)
-    seeds = u.join(F.broadcast(seed_ids), "vid").select(
-        F.col("vid").alias("cid"), F.col("__unit").alias("su")
+    u = caching.persist_tracked(_unit_projection(emb, vec_col, id_col, "__vid"))
+    seed_ids = _lowest_ids(u, "__vid", n_seeds)
+    seeds = u.join(F.broadcast(seed_ids), "__vid").select(
+        F.col("__vid").alias("__cid"), F.col("__unit").alias("su")
     )
 
-    def cells(side: DataFrame, out_id: str, n: int) -> DataFrame:
-        sims = side.crossJoin(F.broadcast(seeds)).select(
-            F.col("vid").alias(out_id),
-            "cid",
-            round_half_up(dot(F.col("__unit"), F.col("su")), 6).alias("__sim"),
-        )
-        w = Window.partitionBy(out_id).orderBy(
-            F.col("__sim").desc(), F.col("cid").asc()
-        )
-        return (
-            sims.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= n)
-            .select(out_id, F.col("cid").alias("cell"))
-        )
+    # unit vectors against unit seeds: cells rank by plain dot, the
+    # form this twin's oracle restates
+    usim = dot(F.col("__unit"), F.col("su"))
 
     # residual of every vector to its own cell centroid (persisted —
     # see the note above: 3 downstream consumers, each of which would
     # otherwise re-run the corpus-grain assignment window)
     resid = caching.persist_tracked(
-        cells(u, "vid", 1)
-        .join(u, "vid")
-        .join(F.broadcast(seeds.withColumnRenamed("cid", "cell")), "cell")
+        _nearest_seeds(u, seeds, sim=usim)
+        .withColumnRenamed("__aid", "__vid")
+        .join(u, "__vid")
+        .join(F.broadcast(seeds.withColumnRenamed("__cid", "cell")), "cell")
         .select(
-            "vid",
+            "__vid",
             "cell",
             F.zip_with(F.col("__unit"), F.col("su"), lambda a, b: a - b).alias(
                 "res"
@@ -2220,13 +2152,13 @@ def ann_ivfpq_seeded_topk(
     # residual codewords: subvectors of the NEXT n_seeds lowest-id
     # vectors (lowest 2n minus the seed set; raw id as the codeword
     # id — never exposed in the output, only argmin tie-break + join)
-    cw_ids = _lowest_ids(u, "vid", 2 * n_seeds).join(
-        F.broadcast(seed_ids), "vid", "left_anti"
+    cw_ids = _lowest_ids(u, "__vid", 2 * n_seeds).join(
+        F.broadcast(seed_ids), "__vid", "left_anti"
     )
     cw = (
-        resid.join(F.broadcast(cw_ids), "vid")
+        resid.join(F.broadcast(cw_ids), "__vid")
         .select(
-            F.col("vid").cast("int").alias("ccode"),
+            F.col("__vid").cast("int").alias("ccode"),
             F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("s"),
             F.col("res"),
         )
@@ -2237,25 +2169,25 @@ def ann_ivfpq_seeded_topk(
         )
     )
     rsubs = resid.select(
-        "vid",
+        "__vid",
         "cell",
         F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("s"),
         F.col("res"),
     ).select(
-        "vid",
+        "__vid",
         "cell",
         "s",
         F.slice(F.col("res"), F.col("s") * dsub + 1, dsub).alias("rsub"),
     )
     # min(struct) argmin tried and reverted here too (r17) — plans as
     # SortAggregate; see ann_pq_seeded_topk's note.
-    w_enc = Window.partitionBy("vid", "s").orderBy(
+    w_enc = Window.partitionBy("__vid", "s").orderBy(
         F.col("__d2").asc(), F.col("ccode").asc()
     )
     codes = (
         rsubs.join(F.broadcast(cw), "s")
         .select(
-            "vid",
+            "__vid",
             "cell",
             "s",
             "ccode",
@@ -2265,11 +2197,11 @@ def ann_ivfpq_seeded_topk(
         )
         .withColumn("__rn", F.row_number().over(w_enc))
         .filter(F.col("__rn") == 1)
-        .select("vid", "cell", "s", "ccode")
+        .select("__vid", "cell", "s", "ccode")
     )
     recon = (
         codes.join(F.broadcast(cw), ["s", "ccode"])
-        .groupBy("vid", "cell")
+        .groupBy("__vid", "cell")
         .agg(
             F.flatten(
                 F.transform(
@@ -2280,15 +2212,20 @@ def ann_ivfpq_seeded_topk(
         )
     )
     q = _unit_projection(queries, vec_col, id_col, "query_id")
-    probes = cells(
-        u.join(queries.select(F.col(id_col).alias("vid")), "vid"),
-        "query_id",
-        n_probe,
-    ).join(q, "query_id")
+    probes = (
+        _nearest_seeds(
+            u.join(queries.select(F.col(id_col).alias("__vid")), "__vid"),
+            seeds,
+            n_probe,
+            usim,
+        )
+        .withColumnRenamed("__aid", "query_id")
+        .join(q, "query_id")
+    )
     scored = (
-        recon.withColumnRenamed("vid", "neighbor_id")
+        recon.withColumnRenamed("__vid", "neighbor_id")
         .join(F.broadcast(probes), "cell")
-        .join(F.broadcast(seeds.withColumnRenamed("cid", "cell")), "cell")
+        .join(F.broadcast(seeds.withColumnRenamed("__cid", "cell")), "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select(
             "query_id",
@@ -2300,14 +2237,7 @@ def ann_ivfpq_seeded_topk(
             ).alias("ivfpq_score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("ivfpq_score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "ivfpq_score", "rnk")
-    )
+    return _rank_topk(scored, "ivfpq_score", k)
 
 
 def _mean_cov(
@@ -2499,19 +2429,30 @@ def semdedup_kmeans(
     assigned = ivf_assign(
         emb, centroids, vec_col=vec_col, id_col=id_col, out_id="__aid"
     )
-    src = emb.select(F.col(id_col).cast("long").alias(id_col), F.col(vec_col))
-    clustered = src.join(
-        assigned.select("__aid", "cell"),
-        src[id_col] == F.col("__aid"),
-    ).select(id_col, vec_col, F.col("cell").alias("__cluster"))
     return semdedup(
-        clustered,
-        "__cluster",
+        join_cells(emb, assigned, vec_col, id_col),
+        "__cell",
         vec_col=vec_col,
         id_col=id_col,
         threshold=threshold,
         n_blocks=n_blocks,
     )
+
+
+def join_cells(
+    emb: DataFrame, assigned: DataFrame, vec_col: str, id_col: str
+) -> DataFrame:
+    """(id_col long, vec_col, __cell): ``emb`` joined id-keyed to an
+    (__aid, cell) assignment — :func:`ivf_assign` output (trained
+    centroids) or :func:`_nearest_seeds` output (seeds). The one
+    join-back between cell assignment and the :func:`semdedup` keep
+    rule, shared by :func:`semdedup_kmeans`, :func:`semdedup_seeded`
+    and the streaming embedding near-dup sink."""
+    src = emb.select(F.col(id_col).cast("long").alias(id_col), F.col(vec_col))
+    return src.join(
+        assigned.select("__aid", "cell"),
+        src[id_col] == F.col("__aid"),
+    ).select(id_col, vec_col, F.col("cell").alias("__cell"))
 
 
 def _exact_rerank(
@@ -2547,13 +2488,7 @@ def _exact_rerank(
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        j.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-    )
+    return _rank_topk(j, "cos_sim", k)
 
 
 def ann_matryoshka(
@@ -2684,21 +2619,7 @@ def hard_negatives(
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "anchor_id",
-            "anchor_label",
-            "neighbor_id",
-            "neighbor_label",
-            "cos_sim",
-            "rnk",
-        )
-    )
+    return _rank_topk(scored, "cos_sim", k, by="anchor_id")
 
 
 def pca_project(
@@ -2823,22 +2744,26 @@ def cluster_label_purity(
     assigned = ivf_assign(
         emb, centroids, vec_col=vec_col, id_col=id_col, out_id="__aid"
     )
+    return _purity_readout(emb, assigned, id_col, label_col)
+
+
+def _purity_readout(
+    emb: DataFrame, assigned: DataFrame, id_col: str, label_col: str
+) -> DataFrame:
+    """Per-cluster size / majority label / purity of an (__aid, cell)
+    assignment — :func:`ivf_assign` output (trained centroids) or
+    :func:`_nearest_seeds` output (seeds) — joined id-keyed to
+    ``emb``'s labels. Shared by :func:`cluster_label_purity`
+    (rows-only) and :func:`cluster_label_purity_seeded`
+    (oracle-bearing twin), so the twin's hash gate covers this exact
+    join-back and readout code. Majority ties break toward the
+    SMALLER label (max on (count, -label))."""
     lab = emb.select(
         F.col(id_col).cast("long").alias("__lid"), F.col(label_col)
     )
     cl = assigned.select("__aid", F.col("cell").alias("cluster")).join(
         lab, F.col("__aid") == F.col("__lid")
     )
-    return _purity_readout(cl, label_col)
-
-
-def _purity_readout(cl: DataFrame, label_col: str) -> DataFrame:
-    """Per-cluster size / majority label / purity over a
-    (cluster, label)-per-vector frame. Shared by
-    :func:`cluster_label_purity` (trained k-means, rows-only) and
-    :func:`cluster_label_purity_seeded` (oracle-bearing twin), so the
-    twin's hash gate covers this exact readout code. Majority ties
-    break toward the SMALLER label (max on (count, -label))."""
     per_label = cl.groupBy("cluster", label_col).agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -2884,41 +2809,9 @@ def cluster_label_purity_seeded(
     never wider than n_seeds × labels. Cluster ids are seed vec_ids
     (longs), not 0..k-1 cell indexes.
     """
-    # per-vector norm hoisted out of the per-(vector, seed) cosine
-    # (r16, bit-identical — see cosine_pair)
-    ea = as_double_array(F.col(vec_col))
-    v = emb.select(
-        F.col(id_col).alias("__vid"),
-        ea.alias("__e"),
-        norm(ea).alias("__n"),
-        F.col(label_col),
-    )
-    seeds = (
-        v.join(F.broadcast(_lowest_ids(v, "__vid", n_seeds)), "__vid")
-        .select(
-            F.col("__vid").alias("__cid"),
-            F.col("__e").alias("__se"),
-            F.col("__n").alias("__sn"),
-        )
-    )
-    sims = v.crossJoin(F.broadcast(seeds)).select(
-        "__vid",
-        label_col,
-        "__cid",
-        round_half_up(
-            cosine_pair(F.col("__e"), F.col("__se"), F.col("__n"), F.col("__sn")),
-            6,
-        ).alias("__sim"),
-    )
-    w = Window.partitionBy("__vid").orderBy(
-        F.col("__sim").desc(), F.col("__cid").asc()
-    )
-    cl = (
-        sims.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(F.col("__cid").alias("cluster"), label_col)
-    )
-    return _purity_readout(cl, label_col)
+    v = _vectors(emb, vec_col, id_col)
+    assigned = _nearest_seeds(v, _lowest_seeds(v, n_seeds))
+    return _purity_readout(emb, assigned, id_col, label_col)
 
 
 def semdedup_seeded(
@@ -2949,45 +2842,11 @@ def semdedup_seeded(
 
     Output: (id_col, cluster, kept) — cluster is the seed vec_id.
     """
-    # per-vector norm hoisted out of the per-(vector, seed) cosine
-    # (r16, bit-identical — see cosine_pair)
-    ea = as_double_array(F.col(vec_col))
-    v = emb.select(
-        F.col(id_col).cast("long").alias("__vid"),
-        ea.alias("__e"),
-        norm(ea).alias("__n"),
-    )
-    seeds = v.join(F.broadcast(_lowest_ids(v, "__vid", n_seeds)), "__vid").select(
-        F.col("__vid").alias("__cid"),
-        F.col("__e").alias("__se"),
-        F.col("__n").alias("__sn"),
-    )
-    sims = v.crossJoin(F.broadcast(seeds)).select(
-        "__vid",
-        "__cid",
-        round_half_up(
-            cosine_pair(F.col("__e"), F.col("__se"), F.col("__n"), F.col("__sn")),
-            6,
-        ).alias("__sim"),
-    )
-    w = Window.partitionBy("__vid").orderBy(
-        F.col("__sim").desc(), F.col("__cid").asc()
-    )
-    cells = (
-        sims.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("__vid", F.col("__cid").alias("__cluster"))
-    )
-    clustered = (
-        emb.select(
-            F.col(id_col).cast("long").alias(id_col), F.col(vec_col)
-        )
-        .join(cells, F.col(id_col) == F.col("__vid"))
-        .select(id_col, vec_col, "__cluster")
-    )
+    v = _vectors(emb, vec_col, id_col)
+    assigned = _nearest_seeds(v, _lowest_seeds(v, n_seeds))
     return semdedup(
-        clustered,
-        "__cluster",
+        join_cells(emb, assigned, vec_col, id_col),
+        "__cell",
         vec_col=vec_col,
         id_col=id_col,
         threshold=threshold,

@@ -433,6 +433,18 @@ def streaming_cms_cells(
     return cms_cells(event_stream, key_col, depth=depth, width=width)
 
 
+def _fs_and_path(spark: SparkSession, path_str: str):
+    """(Hadoop FileSystem, Path) for ``path_str`` — the one lookup every
+    sink here uses for markers, state probes and renames, so they work
+    on ANY URI Spark can write to (``s3a://``, ``abfs://``,
+    ``hdfs://``, ``file:``); a plain ``os.path`` check would silently
+    never see them on an object store."""
+    jvm = spark.sparkContext._jvm
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    path = jvm.org.apache.hadoop.fs.Path(path_str)
+    return path.getFileSystem(hconf), path
+
+
 def start_idempotent_batch_sink(
     sdf: DataFrame,
     output_dir: str,
@@ -463,12 +475,6 @@ def start_idempotent_batch_sink(
     replayed epoch would rewrite. The same shape serves JDBC (staging
     table + transactional rename) or an API (epoch-id dedup key).
     """
-
-    def _fs_and_path(spark, path_str: str):
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(path_str)
-        return path.getFileSystem(hconf), path
 
     def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -569,10 +575,7 @@ def _assert_no_legacy_neardup_store(spark, state_dir: str) -> None:
     band-bucketed ``state_dir/{sigs,bands}/epoch=N`` layout — see
     :func:`start_neardup_suppress_sink`. Silent acceptance would drop
     all previously-admitted state from cross-batch suppression."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(state_dir)
-    fs = root.getFileSystem(hconf)
+    fs, root = _fs_and_path(spark, state_dir)
     if not fs.exists(root):
         return
     legacy = [
@@ -664,12 +667,6 @@ def start_neardup_suppress_sink(
     # orphaning the old epochs. Fail fast instead: legacy stores must
     # be migrated (or a fresh state_dir used) explicitly.
     _assert_no_legacy_neardup_store(docs.sparkSession, state_dir)
-
-    def _fs_and_path(spark, path_str: str):
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(path_str)
-        return path.getFileSystem(hconf), path
 
     sig_cols = [f"mh_{i}" for i in range(k)]
 
@@ -920,12 +917,6 @@ def start_embedding_neardup_suppress_sink(
     """
     from ..operators import caching, similarity
 
-    def _fs_and_path(spark, path_str: str):
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(path_str)
-        return path.getFileSystem(hconf), path
-
     def suppress_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         fs, marker = _fs_and_path(spark, f"{ledger_dir}/epoch-{epoch_id}")
@@ -944,15 +935,7 @@ def start_embedding_neardup_suppress_sink(
                 out_id="__aid",
             )
             clustered = caching.persist_tracked(
-                batch.select(
-                    F.col(id_col).cast("long").alias(id_col),
-                    F.col(vec_col),
-                )
-                .join(
-                    assigned.select("__aid", "cell"),
-                    F.col(id_col) == F.col("__aid"),
-                )
-                .select(id_col, vec_col, F.col("cell").alias("__cell"))
+                similarity.join_cells(batch, assigned, vec_col, id_col)
             )
             # (2) within-batch: the batch semdedup keep rule verbatim
             batch_sup = (
@@ -1319,14 +1302,11 @@ def start_scd2_dimension_sink(
         batch_ts = (
             _dt.datetime(2000, 1, 1) + _dt.timedelta(minutes=epoch_id)
         ).strftime("%Y-%m-%d %H:%M:%S")
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        cur_path = jvm.org.apache.hadoop.fs.Path(snapshot_dir)
-        fs = cur_path.getFileSystem(hconf)
+        fs, cur_path = _fs_and_path(spark, snapshot_dir)
         nxt = snapshot_dir.rstrip("/") + "__next"
-        nxt_path = jvm.org.apache.hadoop.fs.Path(nxt)
+        _, nxt_path = _fs_and_path(spark, nxt)
         aside = snapshot_dir.rstrip("/") + "__aside"
-        aside_path = jvm.org.apache.hadoop.fs.Path(aside)
+        _, aside_path = _fs_and_path(spark, aside)
         # crash recovery FIRST (compact_parquet contract): if a prior
         # epoch died mid-swap the snapshot dir may be missing while a
         # complete copy sits at __next (fully written before any

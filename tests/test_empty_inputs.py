@@ -152,7 +152,12 @@ def test_bigram_and_concurrency_on_empty(spark, empty_docs):
 
 
 def test_round9_additions_on_empty(spark, empty_docs, empty_emb):
-    from b2b_data_pipeline_indiamart_spark.operators import sampling, sketches, temporal
+    from b2b_data_pipeline_indiamart_spark.operators import (
+        caching,
+        sampling,
+        sketches,
+        temporal,
+    )
 
     empty_w = spark.createDataFrame([], "id long, w int")
     assert sampling.weighted_sample_bottomk(empty_w, "id", "w", k=10).count() == 0
@@ -173,3 +178,17 @@ def test_round9_additions_on_empty(spark, empty_docs, empty_emb):
     assert (
         similarity.ann_pq_seeded_topk(empty_emb, empty_emb, dim=64, m=16).count() == 0
     )
+    assert (
+        similarity.ann_ivf_lloyd_seeded_topk(empty_emb, empty_emb, n_seeds=16).count()
+        == 0
+    )
+    assert (
+        similarity.ann_ivfpq_seeded_topk(empty_emb, empty_emb, dim=64, m=16).count()
+        == 0
+    )
+    assert similarity.semdedup_seeded(empty_emb, n_seeds=8).count() == 0
+    empty_labeled = spark.createDataFrame(
+        [], "vec_id long, embedding array<double>, label int"
+    )
+    assert similarity.cluster_label_purity_seeded(empty_labeled, n_seeds=8).count() == 0
+    caching.release_cached()

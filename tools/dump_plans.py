@@ -6,7 +6,9 @@ Usage:
 Writes ``<out_dir>/<key>_<suffix>.txt`` for each key (default: the
 bench headline set). Plans are captured against $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1). Explain is driver-side planning only,
-so this is safe to run on a contended box.
+so this is safe to run on a contended box. A key whose explain fails
+gets ``EXPLAIN FAILED: ...`` in its file, and the run exits 1 after
+naming every failed key.
 """
 
 from __future__ import annotations
@@ -41,6 +43,7 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
+    failed = []
     for key in keys:
         try:
             df = QUERIES[key](spark, sf_dir)
@@ -49,11 +52,14 @@ def main() -> None:
             )
         except Exception as exc:  # noqa: BLE001
             plan = f"EXPLAIN FAILED: {exc}"
+            failed.append(key)
         path = os.path.join(out_dir, f"{key}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
         print(f"wrote {path} ({len(plan)} chars)")
     spark.stop()
+    if failed:
+        sys.exit(f"explain failed for: {', '.join(failed)}")
 
 
 if __name__ == "__main__":
