@@ -5,6 +5,15 @@ live as one parquet per table under ``<sf_dir>/``. ``load`` returns lazy
 DataFrames so Catalyst sees the parquet scan directly — predicate pushdown
 and column pruning reach the file reader (check ``PushedFilters`` /
 ``ReadSchema`` in ``.explain``).
+
+Each table's schema is resolved once per file version
+(``sources/_schema_memo.py``): the first load of a file infers it with
+the usual footer-reading Spark job; later loads of the same version pass
+it back through ``spark.read.schema`` and fire no job. Every load still
+returns a fresh DataFrame over a fresh file index, and a rewritten file
+(new modification time, length or file count) is re-inferred. The same
+memo entry supplies ``table_disk_bytes`` and ``load_parallel``'s scan
+partition count.
 """
 
 from __future__ import annotations
@@ -12,6 +21,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .sources import _schema_memo
 
 TABLES = (
     "region",
@@ -45,8 +56,6 @@ FIXED_DIM_TABLES = frozenset({"region", "nation"})
 # join — shuffle on the key is the scale-safe default.
 BROADCAST_CAP_BYTES = 64 << 20
 
-_disk_bytes_cache: dict[str, int] = {}
-
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     if table not in TABLES:
@@ -61,30 +70,25 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     # session the driver brings; session.get_spark sets the same value
     # at build time so this is a no-op on our own sessions.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = os.path.join(sf_dir, f"{table}.parquet")
+    path = _table_path(sf_dir, table)
     if table == "events":
         return _load_events(spark, path)
-    return spark.read.parquet(path)
+    return _schema_memo.read(spark, "parquet", path)
+
+
+def _table_path(sf_dir: str, table: str) -> str:
+    return os.path.join(sf_dir, f"{table}.parquet")
 
 
 def table_disk_bytes(spark: SparkSession, sf_dir: str, table: str) -> int:
     """On-disk footprint of ``<sf_dir>/<table>.parquet``, via the Hadoop
     FileSystem API (metadata only — no Spark job; works on any
     supported URI, same contract as compact_parquet / the streaming
-    epoch ledger). Cached per path: the testdata is immutable for a
-    session, and the cache keeps the gate free on the 185-key registry
-    where the same dims load thousands of times."""
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    cached = _disk_bytes_cache.get(path)
-    if cached is not None:
-        return cached
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(hconf)
-    size = int(fs.getContentSummary(jpath).getLength())
-    _disk_bytes_cache[path] = size
-    return size
+    epoch ledger). Read from the table's schema-memo entry, so it
+    follows the file: a rewritten table reports its new size."""
+    return _schema_memo.file_entry(
+        spark, "parquet", _table_path(sf_dir, table)
+    ).length
 
 
 def gate_broadcast(
@@ -163,7 +167,7 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    df = _schema_memo.read(spark, "parquet", path)
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
@@ -213,10 +217,19 @@ def load_parallel(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     etl_pipeline_e2e 1.35 s → 0.94 s, q3 0.43 s → 0.35 s; plan diff =
     ``Exchange RoundRobinPartitioning`` + map-side ``Sort`` →
     ``Exchange hashpartitioning(id)``.
+
+    The scan's partition count is kept on the table's schema-memo
+    entry per ``defaultParallelism``, so only the first load of a file
+    version plans the scan to count its partitions.
     """
     df = load(spark, sf_dir, table)
     target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    parts = _schema_memo.file_entry(
+        spark, "parquet", _table_path(sf_dir, table)
+    ).partitions
+    if target not in parts:
+        parts[target] = df.rdd.getNumPartitions()
+    if parts[target] < target:
         key = _PARALLEL_KEYS.get(table)
         if key is not None:
             df = df.repartition(target, df[key])

@@ -6,6 +6,12 @@ backfills a missing/empty ``scraped_at`` column from the file's
 modified time. Here the read itself is a distributed Spark CSV scan;
 only the header rename (pure metadata) and the mtime lookup touch the
 driver, so the source scales to a directory of thousands of files.
+
+The header / type inference runs once per file version
+(``_schema_memo``): the first read of a path pays its two inference
+jobs; later reads of the same version reuse the inferred schema and run
+no job. A rewritten file (new modification time, length or file count)
+is re-inferred, so a changed header is picked up.
 """
 
 from __future__ import annotations
@@ -16,6 +22,8 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import _schema_memo
 
 
 def to_snake_case(name: str) -> str:
@@ -55,12 +63,12 @@ def read_csv_normalized(
     the distributed version fills nulls per-row with ``coalesce``
     instead — same downstream effect, one pass.)
     """
-    df = (
-        spark.read.option("header", "true")
-        .option("inferSchema", str(infer_schema).lower())
-        .option("encoding", "UTF-8")
-        .csv(path)
+    options = (
+        ("header", "true"),
+        ("inferSchema", str(infer_schema).lower()),
+        ("encoding", "UTF-8"),
     )
+    df = _schema_memo.read(spark, "csv", path, options)
     renamed = df.toDF(*[to_snake_case(c) for c in df.columns])
     fallback = _file_mtime_iso(path)
     if scraped_at_col not in renamed.columns:

@@ -783,8 +783,9 @@ def start_neardup_suppress_sink(
             )
             # signatures of the admitted docs extend the store; read
             # back the WRITTEN output so the two writes can't diverge
-            # under a lazy recomputation
-            admitted_ids = spark.read.parquet(
+            # under a lazy recomputation (with the written frame's
+            # schema: no inference job)
+            admitted_ids = spark.read.schema(admitted.schema).parquet(
                 f"{output_dir}/epoch={epoch_id}"
             ).select(id_col)
             admitted_sigs = caching.persist_tracked(
@@ -986,8 +987,9 @@ def start_embedding_neardup_suppress_sink(
                 f"{output_dir}/epoch={epoch_id}"
             )
             # extend the state from the WRITTEN output so the two
-            # writes cannot diverge under a lazy recomputation
-            admitted_ids = spark.read.parquet(
+            # writes cannot diverge under a lazy recomputation (with the
+            # written frame's schema: no inference job)
+            admitted_ids = spark.read.schema(admitted.schema).parquet(
                 f"{output_dir}/epoch={epoch_id}"
             ).select(F.col(id_col).cast("long").alias(id_col))
             (

@@ -1,7 +1,5 @@
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from b2b_data_pipeline_indiamart_spark.session import get_spark
@@ -12,7 +10,6 @@ SF_MEDIUM = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     spark = get_spark("b2b-pipeline-tests")
     yield spark
     spark.stop()
