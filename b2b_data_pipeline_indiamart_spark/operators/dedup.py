@@ -163,6 +163,12 @@ def minhash_signatures(
     fixed-width long with xxhash64 seeded by the permutation index.
     groupBy(doc_id) with map-side partial min keeps shuffle rows at
     k per doc, not per shingle.
+
+    PERF: the k-wide lists here and in :func:`band_table` /
+    :func:`minhash_estimate` are SQL expression strings the JVM parses
+    in one call each; built from ``Column`` objects they cost a py4j
+    round trip per function, literal and alias (11 583 against 766
+    for the three at k=64). The seeds stay INT literals.
     """
     exploded = _with_normalized(docs, text_col, id_col).select(
         F.col(id_col),
@@ -170,7 +176,7 @@ def minhash_signatures(
             F.transform(char_shingles(F.col("__norm"), shingle_n), lambda s: F.xxhash64(s))
         ).alias("__h"),
     )
-    aggs = [F.min(F.xxhash64(F.lit(i), F.col("__h"))).alias(f"mh_{i}") for i in range(k)]
+    aggs = [F.expr(f"min(xxhash64({i}, __h)) AS mh_{i}") for i in range(k)]
     return exploded.groupBy(id_col).agg(*aggs)
 
 
@@ -180,19 +186,15 @@ def band_table(
     """(id, band_id, band_hash) — the LSH bucketing of MinHash
     signatures, shared by :func:`lsh_candidate_pairs` (self-join pair
     generation) and the streaming near-dup sink's cross-batch probe
-    (new batch bands ⋈ admitted-state bands)."""
+    (new batch bands ⋈ admitted-state bands). PERF: one SQL expression
+    string (see :func:`minhash_signatures`)."""
     r = k // bands
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.xxhash64(*[F.col(f"mh_{b * r + j}") for j in range(r)]).alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
+    band_cols = [", ".join(f"mh_{b * r + j}" for j in range(r)) for b in range(bands)]
+    band_structs = ", ".join(
+        f"struct({b} AS band_id, xxhash64({cols}) AS band_hash)" for b, cols in enumerate(band_cols)
     )
     return (
-        signatures.select(F.col(id_col), F.explode(band_structs).alias("bb"))
+        signatures.select(F.col(id_col), F.expr(f"explode(array({band_structs})) AS bb"))
         .select(id_col, "bb.band_id", "bb.band_hash")
     )
 
@@ -344,21 +346,20 @@ def minhash_estimate(
     ``signatures_b`` (optional) resolves the ``id_b`` side from a
     DIFFERENT table — the streaming sink's cross-batch shape (batch
     signatures vs the admitted-state store); default is the self-join
-    shape.
+    shape. PERF: SQL expression strings (see :func:`minhash_signatures`);
+    the divisor is ``CAST(k AS DOUBLE)`` as a bare ``64.0`` is DECIMAL.
     """
-    agree = sum(
-        (F.col(f"a_{i}") == F.col(f"b_{i}")).cast("int") for i in range(k)
+    agree = " + ".join(f"CAST((a_{i} = b_{i}) AS INT)" for i in range(k))
+    sig_a = signatures.selectExpr(
+        f"`{id_col}` AS id_a", *[f"mh_{i} AS a_{i}" for i in range(k)]
     )
-    sig_a = signatures.select(
-        F.col(id_col).alias("id_a"), *[F.col(f"mh_{i}").alias(f"a_{i}") for i in range(k)]
-    )
-    sig_b = (signatures_b if signatures_b is not None else signatures).select(
-        F.col(id_col).alias("id_b"), *[F.col(f"mh_{i}").alias(f"b_{i}") for i in range(k)]
+    sig_b = (signatures_b if signatures_b is not None else signatures).selectExpr(
+        f"`{id_col}` AS id_b", *[f"mh_{i} AS b_{i}" for i in range(k)]
     )
     return (
         pairs.join(sig_a, "id_a")
         .join(sig_b, "id_b")
-        .select("id_a", "id_b", (agree / F.lit(float(k))).alias("est_jaccard"))
+        .selectExpr("id_a", "id_b", f"({agree}) / CAST({k} AS DOUBLE) AS est_jaccard")
     )
 
 

@@ -668,8 +668,6 @@ def start_neardup_suppress_sink(
     # be migrated (or a fresh state_dir used) explicitly.
     _assert_no_legacy_neardup_store(docs.sparkSession, state_dir)
 
-    sig_cols = [f"mh_{i}" for i in range(k)]
-
     def suppress_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         fs, marker = _fs_and_path(spark, f"{ledger_dir}/epoch-{epoch_id}")
